@@ -1465,7 +1465,12 @@ def test_passage_stage_batch_boilerplate_stop(spark, tmp_path):
     assert n == 61
 
 
-def test_funnel_merge_action_discipline(spark, tmp_path, monkeypatch):
+@pytest.mark.parametrize(
+    "entry, n_ckpts", [("merge", 4), ("judge", 2)], ids=["merge", "judge"]
+)
+def test_funnel_merge_action_discipline(
+    spark, tmp_path, monkeypatch, entry, n_ckpts
+):
     """r9 perf contract: the three-stage merge pays the driver-side
     planning tax (every action re-plans its full analyzed tree —
     measured 1.75s per action on the cached survivors frame at sf0.1)
@@ -1483,10 +1488,14 @@ def test_funnel_merge_action_discipline(spark, tmp_path, monkeypatch):
     winnow-slice / gram frames — the pruned slice is the r13
     single-scan store probe) — a regression to the
     count-then-checkpoint-from-cache shape shows up as extra
-    checkpoints; a dropped lineage cut as a missing one."""
+    checkpoints; a dropped lineage cut as a missing one. The read-only
+    judge runs the same admission path: the same 10 persists, and only
+    the stage-2 cut and survivor-set checkpoints (it writes no side
+    rows)."""
     from pyspark.sql.classic.dataframe import DataFrame
 
     from etl_weather_data_pipeline_spark.streaming.corpus import (
+        judge_batch_against_store,
         merge_batch_neardup_into_corpus,
     )
 
@@ -1517,12 +1526,116 @@ def test_funnel_merge_action_discipline(spark, tmp_path, monkeypatch):
          (11, _words("fresh11", 30))],         # new -> admitted
         "doc_id long, text string",
     )
+    if entry == "merge":
+        admitted = merge_batch_neardup_into_corpus(
+            b2, store, band_buckets=4, passage_min_run=16
+        )
+    else:
+        admitted = judge_batch_against_store(
+            b2, store, band_buckets=4, passage_min_run=16
+        )["n_survivors"]
+    monkeypatch.undo()
+    assert admitted == 1
+    assert len(ckpts) == n_ckpts, [c.columns for c in ckpts]
+    assert len(persists) == 10, [p.columns for p in persists]
+
+
+def test_funnel_merge_releases_persists_before_store_write(
+    spark, tmp_path, monkeypatch
+):
+    """Recache-by-path rule: a store write eagerly re-builds every
+    cached plan that reads the store path, so every frame the merge
+    persisted — the flagged fingerprinted batch included, whose
+    store-hit join reads the store — must be released before the
+    survivors append. Spy the store write and check every persist made
+    during the merge is no longer cached at that moment."""
+    from pyspark.sql.classic.dataframe import DataFrame
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from etl_weather_data_pipeline_spark.streaming.corpus import (
+        merge_batch_neardup_into_corpus,
+    )
+
+    store = str(tmp_path / "corpus")
+    b1 = spark.createDataFrame(
+        [(i, _words(f"seed{i}", 30)) for i in range(4)],
+        "doc_id long, text string",
+    )
+    assert merge_batch_neardup_into_corpus(
+        b1, store, band_buckets=4, passage_min_run=16
+    ) == 4
+
+    persisted, at_write = [], []
+    orig_p, orig_w = DataFrame.persist, DataFrameWriter.parquet
+
+    def spy_p(self, *a, **kw):
+        persisted.append(self)
+        return orig_p(self, *a, **kw)
+
+    def spy_w(self, p, *a, **kw):
+        if p == store:
+            at_write.append([d.columns for d in persisted if d.is_cached])
+        return orig_w(self, p, *a, **kw)
+
+    monkeypatch.setattr(DataFrame, "persist", spy_p)
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy_w)
+    b2 = spark.createDataFrame(
+        [(10, _words("seed1", 30)), (11, _words("fresh11", 30))],
+        "doc_id long, text string",
+    )
     assert merge_batch_neardup_into_corpus(
         b2, store, band_buckets=4, passage_min_run=16
     ) == 1
     monkeypatch.undo()
-    assert len(ckpts) == 4, [c.columns for c in ckpts]
-    assert len(persists) == 10, [p.columns for p in persists]
+    assert len(persisted) == 10
+    assert at_write == [[]], at_write
+
+
+def test_judge_counts_match_merge_history(spark, tmp_path):
+    """The judge and the merge share one admission path, so the judge's
+    report for a batch must equal the history row the merge then writes
+    for the same batch against the same store: exact drops (a store
+    copy and a within-batch copy), near-dup drops (a Jaccard near copy
+    and a verbatim passage quote) and admissions."""
+    from etl_weather_data_pipeline_spark.streaming.corpus import (
+        INGEST_HISTORY_SUBDIR,
+        judge_batch_against_store,
+        merge_batch_neardup_into_corpus,
+    )
+
+    kw = dict(band_buckets=4, passage_min_run=16)
+    store = str(tmp_path / "corpus")
+    seeds = {i: _words(f"seed{i}", 30) for i in range(4)}
+    assert merge_batch_neardup_into_corpus(
+        spark.createDataFrame(
+            sorted(seeds.items()), "doc_id long, text string"
+        ),
+        store, history=False, **kw,
+    ) == 4
+    batch = spark.createDataFrame(
+        [
+            (10, seeds[1]),                              # store copy
+            (11, _words("fresh11", 30)),                 # admitted
+            (12, _words("fresh11", 30)),                 # batch copy
+            (13, seeds[2] + " extra"),                   # near copy
+            (14, _words("seed3", 20) + " " + _words("quotefill", 60)),
+            (15, _words("fresh15", 30)),                 # admitted
+        ],
+        "doc_id long, text string",
+    )
+    rep = judge_batch_against_store(batch, store, **kw)
+    n = merge_batch_neardup_into_corpus(batch, store, **kw)
+    hist = spark.read.parquet(f"{store}/{INGEST_HISTORY_SUBDIR}").collect()
+    assert len(hist) == 1, hist
+    h = hist[0]
+    assert rep["n_batch"] == h["n_batch"] == 6
+    assert rep["n_batch"] - rep["n_after_exact"] == h["n_exact_dropped"] == 2
+    assert rep["n_survivors"] == h["n_appended"] == n == 2
+    assert (
+        rep["n_after_exact"] - rep["n_survivors"]
+        == h["n_neardup_dropped"]
+        == 2
+    )
 
 
 @pytest.mark.slow
