@@ -654,8 +654,10 @@ def retrain_ivf_index(
     sibling dir and swapped in with two renames (sinks/writers.py
     _swap_dirs — the live index is never deleted before the replacement
     is complete; a crash between renames leaves the old index intact at
-    `<path>.old-*`). The store holds derived data only, so even a
-    botched swap recovers by re-feeding embeddings. Returns
+    `<path>.old-*`). sinks/writers.py recover_staged_crash finishes or
+    sweeps any such state, at open and again right after the swap. The
+    store holds derived data only, so even a botched swap recovers by
+    re-feeding embeddings. Returns
     {"n_vectors": n, "sse_history": [...], "meta": new_meta}.
 
     Concurrency contract (r11 advice): the retrain snapshots the live
@@ -670,26 +672,19 @@ def retrain_ivf_index(
     run :func:`audit_ivf_coverage` with the fed ids after the swap and
     re-feed the reported gaps).
     """
-    import shutil
-
     from etl_weather_data_pipeline_spark.operators.kmeans import (
         kmeans_fit_full,
     )
-    from etl_weather_data_pipeline_spark.sinks.writers import _swap_dirs
+    from etl_weather_data_pipeline_spark.sinks.writers import (
+        _swap_dirs,
+        recover_staged_crash,
+    )
 
     # Open-time auto-recovery (r14): a prior retrain that died between
     # the swap's two renames left the live path missing (read_ivf_meta
     # below would raise) with the complete new index staged — finish
     # that swap first; mid-staging leftovers get swept.
-    rec = recover_ivf_swap(path)
-    if rec["restored_live"] or rec["removed_stale_dirs"]:
-        import warnings
-
-        warnings.warn(
-            f"retrain_ivf_index: recovered prior crash state at {path}: "
-            f"{rec}",
-            stacklevel=2,
-        )
+    recover_staged_crash(path)
     meta = read_ivf_meta(path)
     old_cents = read_ivf_centroid_matrix(spark, path)
     id_col, vec_col = meta["id_col"], meta["vec_col"]
@@ -799,23 +794,16 @@ def retrain_ivf_index(
             )
         _swap_dirs(path, staged)
     finally:
-        # Self-heal before cleanup: if the swap died BETWEEN its two
-        # renames (live moved aside, replacement not yet in place) the
-        # live path is missing and the staged dir holds the only
-        # complete NEW index — finish the swap with the one remaining
-        # rename instead of deleting it. Otherwise the rmtree is a
-        # no-op after success (staged was renamed away) and removes
-        # partial staging on an early failure.
-        if not os.path.exists(path) and os.path.isdir(staged):
-            import glob as _glob
+        # Self-heal: the same sweep as at open. After a clean swap it
+        # finds nothing; after an early failure it removes the partial
+        # staging. If the swap died BETWEEN its two renames, the live
+        # path is missing and the staged dir holds the only complete NEW
+        # index: the sweep promotes it and removes the half-swap's leaked
+        # <path>.old-* copy. The index WAS then replaced even though the
+        # swap error still propagates, so say so (r11 advice).
+        if recover_staged_crash(path)["action"] == "completed_swap":
             import warnings
 
-            os.rename(staged, path)
-            # the index WAS replaced even though the original swap
-            # error still propagates: say so (a retry would be a
-            # redundant full retrain, not a repair) and remove the
-            # half-swap's leaked <path>.old-* copy, which _swap_dirs
-            # never reached its own cleanup for (r11 advice)
             warnings.warn(
                 "retrain_ivf_index: the staged->live rename completed "
                 "the swap after a mid-swap failure (self-heal) — the "
@@ -823,45 +811,7 @@ def retrain_ivf_index(
                 "retry would be a redundant full retrain",
                 stacklevel=2,
             )
-            for old in _glob.glob(_glob.escape(path.rstrip("/")) + ".old-*"):
-                shutil.rmtree(old, ignore_errors=True)
-        shutil.rmtree(staged, ignore_errors=True)
     return {"n_vectors": n, "sse_history": sse_history, "meta": new_meta}
-
-
-def recover_ivf_swap(path: str) -> dict:
-    """Open-time crash recovery for :func:`retrain_ivf_index`'s staged
-    swap — the cross-process twin of its in-process self-heal (the
-    ``finally`` block can repair a mid-swap EXCEPTION, but not a driver
-    that died outright).
-
-    States, mirroring the swap protocol (stage → rename live aside →
-    rename staged in → cleanup):
-
-    - live index present: any ``<path>.staged-*`` sibling is a
-      mid-staging leftover (unverifiable completeness) and any
-      ``<path>.old-*`` an interrupted cleanup — both removed, index
-      untouched.
-    - live index missing + a staged sibling: the first rename happened,
-      which PROVES staging completed — finish the swap (staged wins,
-      exactly the self-heal's semantics: the retrained index is the one
-      that replaces the drifted one).
-    - live index missing + only an old sibling: the staged copy is gone
-      (e.g. a second crash mid-recovery) — restore the complete old
-      index; the caller re-runs the retrain.
-
-    Either restored copy is a complete, internally consistent index
-    (vectors + centroids + meta travel in one directory), so probes work
-    immediately; the ``corpus_crash_recovery_audit`` lifecycle query
-    pins that the completed swap is assignment-identical to the
-    uncrashed retrain. Pure filesystem metadata, no Spark session.
-    Returns :func:`recover_staged_crash`'s dict.
-    """
-    from etl_weather_data_pipeline_spark.sinks.writers import (
-        recover_staged_crash,
-    )
-
-    return recover_staged_crash(path, staging_prefixes=(".staged-",))
 
 
 def semdedup_global_audit(

@@ -82,11 +82,8 @@ def run_pipeline(
         append_load_history(
             spark,
             history_path,
-            # the Delta MERGE path returns -1 sentinels (no counts API)
-            # — clamp BOTH fields so the audit row never records a
-            # negative load
-            records_loaded=max(counts.get("inserted", 0), 0),
-            records_updated=max(counts.get("updated", 0), 0),
+            records_loaded=counts["inserted"],
+            records_updated=counts["updated"],
             duration_s=sw.seconds,
             status=status,
             error_message=err,

@@ -6781,8 +6781,8 @@ def corpus_store_maintenance(spark, sf_dir):
     "pytest-only. This query fabricates each documented crash state "
     "byte-for-byte on temp stores built from the documents/embeddings "
     "tables, runs the PRODUCT recovery sweeps "
-    "(sinks/writers.recover_staged_crash, "
-    "operators/ann_index.recover_ivf_swap), and judges convergence "
+    "(sinks/writers.recover_staged_crash, the one entry for both "
+    "protocols), and judges convergence "
     "against uncrashed control runs. Scenario A1 (upsert, died after "
     "staging, before any rename): live tree must read exactly the "
     "pre-crash table (staging siblings never pollute reads), recovery "
@@ -6836,7 +6836,6 @@ def corpus_crash_recovery_audit(spark, sf_dir):
     from etl_weather_data_pipeline_spark.operators.ann_index import (
         read_ivf_meta,
         read_ivf_vectors,
-        recover_ivf_swap,
         retrain_ivf_index,
         write_ivf_index,
     )
@@ -6927,8 +6926,8 @@ def corpus_crash_recovery_audit(spark, sf_dir):
         retrain_ivf_index(spark, idx_new, iterations=2)
         shutil.copytree(idx_old, idx_live + ".old-fab00000")
         shutil.copytree(idx_new, idx_live + ".staged-fab0000")
-        rep_b = recover_ivf_swap(idx_live)
-        rep_b2 = recover_ivf_swap(idx_live)  # idempotent re-sweep
+        rep_b = recover_staged_crash(idx_live)
+        rep_b2 = recover_staged_crash(idx_live)  # idempotent re-sweep
 
         # --- fused audit: every symdiff is multiplicity-checked
         # (full-outer on grouped counts), all folded into ONE action

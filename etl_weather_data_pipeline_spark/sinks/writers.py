@@ -6,13 +6,17 @@ pruning, which is the scan-reduction mechanism that actually works at
 100 TB.
 
 Upsert (K6): the reference does a per-row INSERT..ON CONFLICT loop
-(src/load.py:386-426) — O(n) round-trips. Here it is ONE set-based merge.
-Without Delta on the classpath the merge is emulated as
-anti-join + union + staged write + per-partition directory rename: only
-the partitions containing updated keys are read or rewritten, and the old
-data is never deleted before its replacement is durably written. With
-Delta available, ``merge_upsert`` dispatches to a real MERGE INTO.
-Semantics: whole-row update on key match (SURVEY §7.3 item 4).
+(src/load.py:386-426) — O(n) round-trips. Here it is ONE set-based merge
+on parquet: anti-join + union + staged write + per-partition directory
+rename. Only the partitions containing updated keys are read or
+rewritten, and the old data is never deleted before its replacement is
+durably written. Semantics: whole-row update on key match (SURVEY §7.3
+item 4).
+
+This module owns the staged-rename write protocol: every staged rewrite
+in the package (upsert, compaction, the IVF retrain, the streaming
+side-table rewrite) swaps through :func:`_swap_dirs` and recovers at
+open through :func:`recover_staged_crash`.
 """
 
 from __future__ import annotations
@@ -149,7 +153,6 @@ def compact_parquet(
             "zorder_by applies to flat tables; compact a hive "
             "partition's directory directly to z-cluster inside it"
         )
-    import glob
     import os
     import uuid
 
@@ -158,23 +161,8 @@ def compact_parquet(
     # _swap_dirs' two renames leaves the live dir missing with the
     # complete compacted copy staged, which recovery promotes; a
     # mid-staging crash leaves a garbage sibling, which it removes.
-    rec = recover_staged_crash(path, staging_prefixes=(".compact-tmp-",))
-    if rec["restored_live"] or rec["removed_stale_dirs"]:
-        import warnings
-
-        warnings.warn(
-            f"compact_parquet: recovered prior crash state at {path}: "
-            f"{rec}",
-            stacklevel=2,
-        )
-
-    def _files(root: str) -> list[str]:
-        return glob.glob(
-            os.path.join(glob.escape(root), "**", "*.parquet"),
-            recursive=True,
-        )
-
-    before = _files(path)
+    recover_staged_crash(path)
+    before = _parquet_files(path)
     target_bytes = target_file_mb * 1024 * 1024
     df = spark.read.parquet(path)
     if partition_by:
@@ -257,7 +245,7 @@ def compact_parquet(
     # positives under the documented single-writer discipline; the
     # race between this diff and the rename itself remains (same
     # residual window the retrain documents).
-    late = sorted(set(_files(path)) - set(before))
+    late = sorted(_parquet_files(path) - before)
     if late:
         import shutil
 
@@ -269,7 +257,10 @@ def compact_parquet(
             "pause writers for a clean pass"
         )
     _swap_dirs(path, staged)
-    return {"files_before": len(before), "files_after": len(_files(path))}
+    return {
+        "files_before": len(before),
+        "files_after": len(_parquet_files(path)),
+    }
 
 
 def write_orc(
@@ -319,6 +310,30 @@ def write_bucketed_table(
     w.saveAsTable(table)
 
 
+def _parquet_files(root: str) -> set[str]:
+    """Every parquet file under ``root``, recursively (driver-side glob;
+    ``root`` is escaped, so glob metachars in a table path are literal)."""
+    import glob
+    import os
+
+    return set(
+        glob.glob(
+            os.path.join(glob.escape(root), "**", "*.parquet"), recursive=True
+        )
+    )
+
+
+def _parquet_dirs(root: str) -> list[str]:
+    """The dirs under ``root`` that hold parquet files, relative to it and
+    sorted — a staged or trash tree's hive partition dirs (``"."`` for a
+    flat tree)."""
+    import os
+
+    return sorted(
+        {os.path.relpath(os.path.dirname(f), root) for f in _parquet_files(root)}
+    )
+
+
 def _list_parquet_files(root: str, rel_dirs: Sequence[str] | None) -> set:
     """Driver-side parquet file listing for the concurrent-append guards.
 
@@ -329,25 +344,13 @@ def _list_parquet_files(root: str, rel_dirs: Sequence[str] | None) -> set:
     glob is a single-threaded walk of millions of files; a daily batch
     touches a handful of date partitions).
     """
-    import glob
     import os
 
     if rel_dirs is None:
-        return set(
-            glob.glob(
-                os.path.join(glob.escape(root), "**", "*.parquet"),
-                recursive=True,
-            )
-        )
-    out: set = set()
-    for rel in rel_dirs:
-        out.update(
-            glob.glob(
-                os.path.join(glob.escape(os.path.join(root, rel)), "**", "*.parquet"),
-                recursive=True,
-            )
-        )
-    return out
+        return _parquet_files(root)
+    return set().union(
+        *(_parquet_files(os.path.join(root, r)) for r in rel_dirs)
+    )
 
 
 def _hive_rel_dirs(
@@ -381,19 +384,6 @@ def _hive_rel_dirs(
     return rels
 
 
-def _delta_available(spark: SparkSession) -> bool:
-    try:
-        # Both the Python package and the JVM class must be present; py4j
-        # attribute access never raises, so probe with a real classloader
-        # lookup.
-        from delta.tables import DeltaTable  # noqa: F401
-
-        spark._jvm.java.lang.Class.forName("io.delta.tables.DeltaTable")
-        return True
-    except Exception:
-        return False
-
-
 def merge_upsert(
     spark: SparkSession,
     df: DataFrame,
@@ -401,34 +391,39 @@ def merge_upsert(
     keys: Sequence[str] = UPSERT_KEYS,
     partition_by: Sequence[str] = ("date",),
 ) -> dict[str, int]:
-    """K6 — keyed whole-row upsert into a parquet/Delta table at ``path``.
+    """K6 — keyed whole-row upsert into the parquet table at ``path``.
 
-    Emulated merge plan (no Delta), proportional to the BATCH, not the
-    table: read only the partitions the batch touches (null-safe
-    semi-join on the distinct partition values — at 100 TB a daily batch
-    touches a handful of date partitions out of thousands) → anti-join
-    away rows whose key collides with the batch → union the batch →
-    stage the touched partitions to a sibling dir and swap them in with
-    per-partition renames (crash-safety paragraph below). The staged
-    write streams straight from the live files — the old data is never
-    deleted before its replacement is durably on disk.
+    Merge plan, proportional to the BATCH, not the table: read only the
+    partitions the batch touches (null-safe semi-join on the distinct
+    partition values — at 100 TB a daily batch touches a handful of date
+    partitions out of thousands) → anti-join away rows whose key collides
+    with the batch → union the batch → stage the touched partitions to a
+    sibling dir and swap them in with per-partition renames (crash-safety
+    paragraph below). The staged write streams straight from the live
+    files — the old data is never deleted before its replacement is
+    durably on disk.
 
     Contract: every partition column must be functionally dependent on the
     merge key (here date = date(timestamp), timestamp ∈ keys), so a key
     collision can never hide in an untouched partition. The batch side of
-    the contract is CHECKED (one batch-proportional agg, enforced on the
-    fresh-table path too — the first batch must not seed key-violating
-    rows): no two batch rows may share a key, no merge key may be NULL
-    (SQL MERGE parity — an ON clause never matches NULL, so a NULL-keyed
-    row would re-insert forever instead of updating), and with
-    ``partition_by=()`` the merge falls back to the full-table path
-    instead of a degenerate zero-column join. The existing-table side is
-    the caller's schema-design invariant — checking it would require
-    scanning untouched partitions, defeating the point. The partition
-    semi-join is NULL-SAFE so a legitimately NULL partition VALUE (a
-    nullable non-key partition column) keeps its existing rows: they
-    ride ``kept`` into the staged ``__HIVE_DEFAULT_PARTITION__`` dir
-    instead of being silently dropped by the swap.
+    the contract is CHECKED, on the fresh-table path too (the first batch
+    must not seed key-violating rows): no two batch rows may share a key,
+    no merge key may be NULL (SQL MERGE parity — an ON clause never
+    matches NULL, so a NULL-keyed row would re-insert forever instead of
+    updating), and with ``partition_by=()`` the merge falls back to the
+    full-table path instead of a degenerate zero-column join. The
+    existing-table side is the caller's schema-design invariant —
+    checking it would require scanning untouched partitions, defeating
+    the point. The partition semi-join is NULL-SAFE so a legitimately
+    NULL partition VALUE (a nullable non-key partition column) keeps its
+    existing rows: they ride ``kept`` into the staged
+    ``__HIVE_DEFAULT_PARTITION__`` dir instead of being silently dropped
+    by the swap.
+
+    Driver actions: one batch aggregate (contract check, batch row count
+    and the touched partition values together), then the staged write —
+    plus, when the table exists, one count of the existing rows the batch
+    updates.
 
     Crash safety: touched partitions are staged to a sibling temp dir and
     swapped in one directory-rename per partition. Untouched partitions
@@ -437,193 +432,145 @@ def merge_upsert(
     re-running the batch — the merge is idempotent), and never drops the
     rest of the table. Returns {"inserted": n, "updated": n}.
     """
-    import glob
     import os
     import shutil
     import uuid
 
     keys = list(keys)
     parts = list(partition_by)
-    if not _delta_available(spark):
-        # Open-time auto-recovery (r14): sweep any crash state a prior
-        # upsert left before deciding anything from the path. Ordering
-        # matters — for a flat-table crash between the swap's two
-        # renames the live dir is MISSING, and without recovery the
-        # "re-run the batch" doctrine would take the fresh-write branch
-        # below and silently replace the whole table with just this
-        # batch. On a healthy table this is three globs. Single-writer
-        # discipline still applies: another writer's LIVE staging dir
-        # is indistinguishable from a crashed one and gets swept.
-        rec = recover_staged_crash(path, staging_prefixes=(".upsert-tmp-",))
-        if (
-            rec["restored_live"]
-            or rec["restored_partitions"]
-            or rec["removed_stale_dirs"]
-        ):
-            import warnings
-
-            warnings.warn(
-                f"merge_upsert: recovered prior crash state at {path}: "
-                f"{rec}; proceeding with the merge (idempotent re-runs "
-                "converge)",
-                stacklevel=2,
-            )
-        # Batch contract check — ONE batch-proportional agg covering both
-        # invariants, enforced before the fresh-table branch too (the
-        # first batch must not seed the table with key-violating rows).
-        any_null_key = None
-        for k in keys:
-            c = F.col(k).isNull()
-            any_null_key = c if any_null_key is None else (any_null_key | c)
-        contract = (
-            df.groupBy(*keys)
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .agg(
-                F.max("__n").alias("max_dup"),
-                F.max(any_null_key.cast("int")).alias("has_null_key"),
-            )
-            .first()
+    # Open-time auto-recovery (r14): sweep any crash state a prior
+    # upsert left before deciding anything from the path. Ordering
+    # matters — for a flat-table crash between the swap's two renames
+    # the live dir is MISSING, and without recovery the "re-run the
+    # batch" doctrine would take the fresh-write branch below and
+    # silently replace the whole table with just this batch. On a
+    # healthy table this is a few globs. Single-writer discipline still
+    # applies: another writer's LIVE staging dir is indistinguishable
+    # from a crashed one and gets swept.
+    recover_staged_crash(path)
+    # ONE batch pass, grouped by the merge keys ALONE: two rows sharing a
+    # key count as duplicates even when they sit in different partitions.
+    # Per key it keeps the row count and one partition value; a unique-key
+    # batch has exactly one per key, so the set of them is the batch's
+    # distinct partition values.
+    any_null_key = None
+    for k in keys:
+        c = F.col(k).isNull()
+        any_null_key = c if any_null_key is None else (any_null_key | c)
+    pv = [F.first(F.struct(*parts)).alias("__pv")] if parts else []
+    batch = (
+        df.groupBy(*keys)
+        .agg(F.count(F.lit(1)).alias("__n"), *pv)
+        .agg(
+            F.sum("__n").alias("n"),
+            F.max("__n").alias("max_dup"),
+            F.max(any_null_key.cast("int")).alias("has_null_key"),
+            *([F.collect_set("__pv").alias("part_values")] if parts else []),
         )
-        if contract["has_null_key"]:
-            raise ValueError(
-                f"merge_upsert batch contains NULL in merge keys {keys}; "
-                "a NULL key never equality-matches (SQL MERGE semantics), "
-                "so the row would be re-inserted on every run — drop or "
-                "repair such rows first"
-            )
-        if (contract["max_dup"] or 0) > 1:
-            raise ValueError(
-                f"merge_upsert batch contains duplicate rows for keys {keys}; "
-                "dedup the batch first (last-write-wins is ambiguous here)"
-            )
-        if not os.path.exists(path):
-            write_parquet(df, path, "overwrite", parts)
-            return {"inserted": df.count(), "updated": 0}
-        # Concurrent-append guard snapshot (r14, same class as the
-        # compaction's): taken BEFORE the `existing` read pins its own
-        # listing, diffed just before the swap — files another writer
-        # lands in a TOUCHED partition during the staged write would
-        # otherwise ride the partition dir into the trash and be
-        # removed with it. Only TOUCHED partitions ever swap, so for a
-        # partitioned table both the snapshot and the diff walk only the
-        # batch's partition dirs (one extra batch-proportional collect
-        # derives them) — a full recursive glob here would be an
-        # O(all table files) single-threaded driver walk per upsert,
-        # breaking the proportional-to-the-BATCH contract at 100 TB.
-        guard_dirs = None
-        if parts:
-            batch_parts = df.select(*parts).distinct()
-            guard_dirs = _hive_rel_dirs(parts, batch_parts.collect())
-        before_files = _list_parquet_files(path, guard_dirs)
-        existing = spark.read.parquet(path)
-        if parts:
-            # NULL-SAFE semi-join: batch keys are non-null (contract
-            # above), but a nullable NON-key partition column is legal —
-            # plain equality would exclude the existing
-            # __HIVE_DEFAULT_PARTITION__ rows from `kept` while the swap
-            # still replaces that directory, silently destroying them.
-            existing = existing.join(
-                F.broadcast(batch_parts),
-                [
-                    existing[c].eqNullSafe(batch_parts[c])
-                    for c in parts
-                ],
-                "left_semi",
-            )
-        batch_keys = df.select(*keys).distinct()
-        updated = (
-            existing.join(F.broadcast(batch_keys), keys, "left_semi").count()
+        .first()
+    )
+    if batch["has_null_key"]:
+        raise ValueError(
+            f"merge_upsert batch contains NULL in merge keys {keys}; "
+            "a NULL key never equality-matches (SQL MERGE semantics), "
+            "so the row would be re-inserted on every run — drop or "
+            "repair such rows first"
         )
-        kept = existing.join(F.broadcast(batch_keys), keys, "left_anti")
-        out = kept.select(*existing.columns).unionByName(
-            df.select(*existing.columns)
+    if (batch["max_dup"] or 0) > 1:
+        raise ValueError(
+            f"merge_upsert batch contains duplicate rows for keys {keys}; "
+            "dedup the batch first (last-write-wins is ambiguous here)"
         )
-        inserted = df.count() - updated
-        staged = path.rstrip("/") + f".upsert-tmp-{uuid.uuid4().hex[:8]}"
-        # The staged write streams from the live files — they are only
-        # replaced after the new data is durably on disk.
-        write_parquet(out, staged, "overwrite", parts)
-
-        def _abort_on_late(late: list[str]) -> None:
-            # Same semantics as compact_parquet's guard: an upsert has
-            # no way to fold a concurrent writer's rows in (they may
-            # collide with the batch's own keys), so abort loudly with
-            # the original — concurrent rows included — intact. The
-            # merge is idempotent: re-running the same batch after the
-            # abort converges.
-            if late:
-                shutil.rmtree(staged, ignore_errors=True)
-                raise RuntimeError(
-                    f"merge_upsert: {len(late)} file(s) were appended to "
-                    f"{path} during the staged write; upsert aborted with "
-                    "the original (appends included) intact — re-run the "
-                    "batch, or pause writers for a clean pass"
-                )
-
-        if not parts:
-            _abort_on_late(
-                sorted(_list_parquet_files(path, None) - before_files)
-            )
-            _swap_dirs(path, staged)
-            return {"inserted": inserted, "updated": updated}
-        # Two renames per touched hive partition directory: old moves to a
-        # trash dir OUTSIDE the table tree (an `.old` dir left inside it on
-        # crash would be picked up by partition discovery), then the staged
-        # replacement moves in. A crash leaves each partition old-complete
-        # (still in live or in trash) or new-complete — never both gone.
-        staged_parts = sorted(
-            {
-                os.path.relpath(os.path.dirname(f), staged)
-                for f in glob.glob(
-                    os.path.join(glob.escape(staged), "**", "*.parquet"),
-                    recursive=True,
-                )
-            }
+    n = batch["n"] or 0
+    if not os.path.exists(path):
+        write_parquet(df, path, "overwrite", parts)
+        return {"inserted": n, "updated": 0}
+    # Concurrent-append guard snapshot (r14, same class as the
+    # compaction's): taken BEFORE the `existing` read pins its own
+    # listing, diffed just before the swap — files another writer lands
+    # in a TOUCHED partition during the staged write would otherwise ride
+    # the partition dir into the trash and be removed with it. Only
+    # TOUCHED partitions ever swap, so for a partitioned table both the
+    # snapshot and the diff walk only the batch's partition dirs — a full
+    # recursive glob here would be an O(all table files) single-threaded
+    # driver walk per upsert, breaking the proportional-to-the-BATCH
+    # contract at 100 TB.
+    guard_dirs = (
+        _hive_rel_dirs(parts, batch["part_values"]) if parts else None
+    )
+    before_files = _list_parquet_files(path, guard_dirs)
+    existing = spark.read.parquet(path)
+    if parts:
+        # NULL-SAFE semi-join: batch keys are non-null (contract above),
+        # but a nullable NON-key partition column is legal — plain
+        # equality would exclude the existing __HIVE_DEFAULT_PARTITION__
+        # rows from `kept` while the swap still replaces that directory,
+        # silently destroying them.
+        batch_parts = df.select(*parts).distinct()
+        existing = existing.join(
+            F.broadcast(batch_parts),
+            [existing[c].eqNullSafe(batch_parts[c]) for c in parts],
+            "left_semi",
         )
+    batch_keys = df.select(*keys).distinct()
+    updated = existing.join(F.broadcast(batch_keys), keys, "left_semi").count()
+    kept = existing.join(F.broadcast(batch_keys), keys, "left_anti")
+    out = kept.select(*existing.columns).unionByName(
+        df.select(*existing.columns)
+    )
+    staged = path.rstrip("/") + f".upsert-tmp-{uuid.uuid4().hex[:8]}"
+    # The staged write streams from the live files — they are only
+    # replaced after the new data is durably on disk.
+    write_parquet(out, staged, "overwrite", parts)
+    late = _list_parquet_files(path, guard_dirs) - before_files
+    if parts:
+        staged_parts = _parquet_dirs(staged)
         # Only TOUCHED partitions swap, so only their late files are at
         # risk; a concurrent append to an untouched (or brand-new)
         # partition survives untouched and is no reason to abort.
-        _abort_on_late(
-            sorted(
-                f
-                for f in _list_parquet_files(path, guard_dirs) - before_files
-                if os.path.relpath(os.path.dirname(f), path) in staged_parts
-            )
+        late = {
+            f for f in late
+            if os.path.relpath(os.path.dirname(f), path) in staged_parts
+        }
+    if late:
+        # Same semantics as compact_parquet's guard: an upsert has no way
+        # to fold a concurrent writer's rows in (they may collide with the
+        # batch's own keys), so abort loudly with the original —
+        # concurrent rows included — intact. The merge is idempotent:
+        # re-running the same batch after the abort converges.
+        shutil.rmtree(staged, ignore_errors=True)
+        raise RuntimeError(
+            f"merge_upsert: {len(late)} file(s) were appended to "
+            f"{path} during the staged write; upsert aborted with "
+            "the original (appends included) intact — re-run the "
+            "batch, or pause writers for a clean pass"
         )
-        trash = path.rstrip("/") + f".upsert-old-{uuid.uuid4().hex[:8]}"
-        for rel in staged_parts:
-            dest = os.path.join(path, rel)
-            src = os.path.join(staged, rel)
-            if os.path.exists(dest):
-                moved = os.path.join(trash, rel)
-                os.makedirs(os.path.dirname(moved), exist_ok=True)
-                os.rename(dest, moved)
-            os.makedirs(os.path.dirname(dest), exist_ok=True)
-            os.rename(src, dest)
-        shutil.rmtree(staged)
-        shutil.rmtree(trash, ignore_errors=True)
-        return {"inserted": inserted, "updated": updated}
-    # Delta path: real MERGE INTO, whole-row WHEN MATCHED UPDATE SET *.
-    from delta.tables import DeltaTable
-
-    if not DeltaTable.isDeltaTable(spark, path):
-        df.write.format("delta").partitionBy(*parts).save(path)
-        return {"inserted": df.count(), "updated": 0}
-    target = DeltaTable.forPath(spark, path)
-    cond = " AND ".join(f"t.{k} = s.{k}" for k in keys)
-    (
-        target.alias("t")
-        .merge(df.alias("s"), cond)
-        .whenMatchedUpdateAll()
-        .whenNotMatchedInsertAll()
-        .execute()
-    )
-    return {"inserted": -1, "updated": -1}  # Delta doesn't expose counts here
+    if not parts:
+        _swap_dirs(path, staged)
+        return {"inserted": n - updated, "updated": updated}
+    # Two renames per touched hive partition directory: old moves to a
+    # trash dir OUTSIDE the table tree (an `.old` dir left inside it on
+    # crash would be picked up by partition discovery), then the staged
+    # replacement moves in. A crash leaves each partition old-complete
+    # (still in live or in trash) or new-complete — never both gone.
+    trash = path.rstrip("/") + f".upsert-old-{uuid.uuid4().hex[:8]}"
+    for rel in staged_parts:
+        dest = os.path.join(path, rel)
+        src = os.path.join(staged, rel)
+        if os.path.exists(dest):
+            moved = os.path.join(trash, rel)
+            os.makedirs(os.path.dirname(moved), exist_ok=True)
+            os.rename(dest, moved)
+        os.makedirs(os.path.dirname(dest), exist_ok=True)
+        os.rename(src, dest)
+    shutil.rmtree(staged)
+    shutil.rmtree(trash, ignore_errors=True)
+    return {"inserted": n - updated, "updated": updated}
 
 
 # Every staged-rename protocol's sibling-dir prefix, in one place: each
-# open-time recovery sweeps ALL of them (not just its caller's), which is
-# what makes the promote-staged-on-missing-live rule SOUND across
+# open-time recovery sweeps ALL of them, whichever protocol opens, which
+# is what makes the promote-staged-on-missing-live rule SOUND across
 # protocols. The proof "a missing live dir means the surviving staged
 # copy is complete" holds per-protocol (only a swap removes live, and
 # every swap runs after its staging finished) — but a stale INCOMPLETE
@@ -637,44 +584,52 @@ def merge_upsert(
 _ALL_STAGING_PREFIXES = (
     ".upsert-tmp-",  # merge_upsert
     ".compact-tmp-",  # compact_parquet
-    ".staged-",  # retrain_ivf_index / recover_ivf_swap
+    ".staged-",  # operators/ann_index.py retrain_ivf_index
     ".__staged__",  # streaming side-table bucketed rewrite
 )
 
 
-def recover_staged_crash(
-    path: str,
-    staging_prefixes: Sequence[str] = (".upsert-tmp-", ".compact-tmp-"),
-) -> dict:
+def recover_staged_crash(path: str) -> dict:
     """Table-open crash sweep for the staged-rename write protocol shared
-    by :func:`merge_upsert`, :func:`compact_parquet`, and
-    :func:`_swap_dirs`. A process death anywhere in a staged write leaves
-    exactly one of these on-disk states, each recoverable from filesystem
-    METADATA alone (no Spark session, no data-file reads, O(touched
-    partitions) renames at any table size):
+    by :func:`merge_upsert`, :func:`compact_parquet`, the IVF index
+    retrain (``operators/ann_index.py retrain_ivf_index``) and the
+    streaming side-table rewrite, all of which swap via
+    :func:`_swap_dirs`. Each of them calls it when it opens its path, and
+    the retrain calls it once more after its swap (the in-process
+    self-heal of a swap that raised between its two renames). A process
+    death anywhere in a staged write leaves exactly one of these on-disk
+    states, each recoverable from filesystem METADATA alone (no Spark
+    session, no data-file reads, O(touched partitions) renames at any
+    table size):
 
-    - live table intact + a staging sibling (``<path>.upsert-tmp-*`` /
-      ``<path>.compact-tmp-*``): the crash hit during or right after the
-      staged write, before any rename. Staging completeness is
-      unverifiable in this state, so the staged dir is garbage by
-      contract — remove it; the caller re-runs the batch (the merge is
-      idempotent, the compaction a pure rewrite).
+    - live table intact + a staging sibling (any prefix in
+      ``_ALL_STAGING_PREFIXES``, e.g. ``<path>.upsert-tmp-*``,
+      ``<path>.staged-*``) and/or an ``<path>.old-*`` copy: the crash hit
+      during or right after the staged write, before any rename, or in
+      the swap's final cleanup. Staging completeness is unverifiable in
+      this state, so the staged dir is garbage by contract — remove it
+      with the old copy; the caller re-runs the batch (the merge is
+      idempotent, the compaction a pure rewrite, the retrain a
+      re-derivation).
     - a touched hive partition missing from live, its old copy in a
       ``<path>.upsert-old-*`` trash sibling: the crash hit between that
       partition's two renames. Restore the trash copy (the old-complete
       guarantee — a dest only goes missing AFTER its old copy reached
       the trash), then re-run the batch.
-    - the live dir itself missing (a flat-table ``_swap_dirs`` crash
-      between its two renames): restore the newest-by-mtime staging
-      sibling when one survives — the first rename only ever happens
-      after staging completed, so a missing live PROVES the staged copy
-      is complete, and preferring it finishes the swap (the same
-      staged-wins rule as retrain_ivf_index's in-process self-heal) —
-      else the complete old copy at ``<path>.old-*``. The completeness
-      proof is cross-protocol because every open sweeps every protocol's
-      staging prefix (see ``_ALL_STAGING_PREFIXES``): a foreign
-      protocol's stale mid-staging garbage cannot survive to be
-      mis-promoted here.
+    - the live dir itself missing (a ``_swap_dirs`` crash between its
+      two renames): restore the newest-by-mtime staging sibling when one
+      survives — the first rename only ever happens after staging
+      completed, so a missing live PROVES the staged copy is complete,
+      and preferring it finishes the swap (staged wins: for the IVF
+      retrain, the retrained index replaces the drifted one) — else the
+      complete old copy at ``<path>.old-*`` (e.g. after a second crash
+      mid-recovery; the caller re-runs). An IVF index travels as one
+      directory (vectors + centroids + meta), so either restored copy
+      is a complete, internally consistent index that probes
+      immediately. The completeness proof is cross-protocol because
+      every open sweeps every protocol's staging prefix (see
+      ``_ALL_STAGING_PREFIXES``): a foreign protocol's stale
+      mid-staging garbage cannot survive to be mis-promoted here.
     - nothing restorable from any of the above (``action:
       "unrecoverable"``): NOTHING is swept — whatever siblings exist
       (e.g. partition trash a vanished live dir orphaned) are the only
@@ -682,14 +637,16 @@ def recover_staged_crash(
       recovery" into permanent loss.
 
     Whichever copy a state restores, re-running the idempotent merge
-    converges the table to the exact clean-run content — pinned end-to-end
-    by the ``corpus_crash_recovery_audit`` lifecycle query and
-    ``tests/test_pipeline.py``. Always removes every leftover
+    converges the table to the exact clean-run content, and a completed
+    retrain swap is assignment-identical to the uncrashed retrain —
+    pinned end-to-end by the ``corpus_crash_recovery_audit`` lifecycle
+    query and ``tests/test_pipeline.py``. Always removes every leftover
     staging/trash sibling (they live OUTSIDE the table tree, so reads
     were never polluted; the sweep reclaims space and makes reruns
-    unambiguous). Returns ``{"action": "clean" | "restored_partitions" |
-    "completed_swap" | "restored_old" | "unrecoverable",
-    "restored_live": 0|1, "restored_partitions": r,
+    unambiguous), and warns ``recovered prior crash state at <path>``
+    whenever it restored or removed anything. Returns ``{"action":
+    "clean" | "restored_partitions" | "completed_swap" | "restored_old"
+    | "unrecoverable", "restored_live": 0|1, "restored_partitions": r,
     "removed_stale_dirs": m}``.
 
     Reference parity: src/load.py:371-486 leans on the database's own
@@ -707,9 +664,12 @@ def recover_staged_crash(
     gbase = glob.escape(base)
 
     def _staging_dirs() -> list[str]:
-        prefixes = dict.fromkeys((*staging_prefixes, *_ALL_STAGING_PREFIXES))
         return sorted(
-            {d for p in prefixes for d in glob.glob(gbase + p + "*")}
+            {
+                d
+                for p in _ALL_STAGING_PREFIXES
+                for d in glob.glob(gbase + p + "*")
+            }
         )
 
     restored_live = 0
@@ -736,16 +696,7 @@ def recover_staged_crash(
     else:
         action = "clean"
         for trash in sorted(glob.glob(gbase + ".upsert-old-*")):
-            rels = sorted(
-                {
-                    os.path.relpath(os.path.dirname(f), trash)
-                    for f in glob.glob(
-                        os.path.join(glob.escape(trash), "**", "*.parquet"),
-                        recursive=True,
-                    )
-                }
-            )
-            for rel in rels:
+            for rel in _parquet_dirs(trash):
                 dest = os.path.join(base, rel)
                 if rel != "." and not os.path.exists(dest):
                     os.makedirs(os.path.dirname(dest), exist_ok=True)
@@ -762,12 +713,19 @@ def recover_staged_crash(
         if os.path.exists(d):
             shutil.rmtree(d, ignore_errors=True)
             removed += 1
-    return {
+    rep = {
         "action": action,
         "restored_live": restored_live,
         "restored_partitions": restored_partitions,
         "removed_stale_dirs": removed,
     }
+    if restored_live or restored_partitions or removed:
+        import warnings
+
+        warnings.warn(
+            f"recovered prior crash state at {path}: {rep}", stacklevel=2
+        )
+    return rep
 
 
 def export_training_shards(

@@ -492,15 +492,7 @@ def _ensure_side_table(
         recover_staged_crash,
     )
 
-    rec = recover_staged_crash(loc, staging_prefixes=(".__staged__",))
-    if rec["restored_live"] or rec["removed_stale_dirs"]:
-        import warnings
-
-        warnings.warn(
-            f"side table {name}: recovered prior crash state at {loc}: "
-            f"{rec}",
-            stacklevel=2,
-        )
+    recover_staged_crash(loc)
     rows = _read_parquet_if_exists(spark, loc)
     if rows is None:
         return None

@@ -2218,14 +2218,17 @@ def test_pq_battery_single_encode_pass(spark, monkeypatch):
 def test_recover_ivf_swap_cross_process_crash(spark, tmp_path):
     """r14 (r15 debutant groundwork): retrain_ivf_index's in-process
     self-heal can't fire when the driver dies outright between the
-    swap's two renames; recover_ivf_swap must finish the swap at open
-    time (staged wins — a missing live dir proves staging completed)
+    swap's two renames; recover_staged_crash must finish the swap at
+    open time (staged wins — a missing live dir proves staging completed)
     and the recovered index must be assignment-identical to the
     uncrashed retrain."""
     import glob
     import shutil
 
     from etl_weather_data_pipeline_spark.operators import ann_index as AX
+    from etl_weather_data_pipeline_spark.sinks.writers import (
+        recover_staged_crash,
+    )
 
     emb = load(spark, SF_SMOKE, "embeddings").select("vec_id", "embedding")
     old_idx = str(tmp_path / "idx_old")
@@ -2239,7 +2242,7 @@ def test_recover_ivf_swap_cross_process_crash(spark, tmp_path):
     live = str(tmp_path / "live")
     shutil.copytree(old_idx, live + ".old-fab00000")
     shutil.copytree(new_idx, live + ".staged-fab0000")
-    rep = AX.recover_ivf_swap(live)
+    rep = recover_staged_crash(live)
     assert rep["action"] == "completed_swap"
     assert glob.glob(live + ".old-*") == []
     assert glob.glob(live + ".staged-*") == []
@@ -2251,7 +2254,7 @@ def test_recover_ivf_swap_cross_process_crash(spark, tmp_path):
 
     # live present: staged/old siblings are leftovers, index untouched
     shutil.copytree(old_idx, live + ".staged-leftover")
-    rep = AX.recover_ivf_swap(live)
+    rep = recover_staged_crash(live)
     assert rep["action"] == "clean" and rep["removed_stale_dirs"] == 1
     assert AX.read_ivf_meta(live) == AX.read_ivf_meta(new_idx)
 

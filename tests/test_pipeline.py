@@ -110,69 +110,6 @@ def test_upsert_rewrites_only_touched_partitions(spark, batch, tmp_path):
     )  # the updated row won
 
 
-def test_delta_merge_builder_contract(spark, batch, tmp_path, monkeypatch):
-    """Execute the Delta MERGE-builder path against a fake DeltaTable (the
-    real package isn't in this container): the merge condition must cover
-    every key and the builder chain must be
-    matched-update-all -> not-matched-insert-all -> execute."""
-    import sys
-    import types
-
-    from etl_weather_data_pipeline_spark.sinks import writers
-
-    calls: dict = {"chain": []}
-
-    class FakeDeltaTable:
-        @staticmethod
-        def isDeltaTable(s, p):
-            return True
-
-        @classmethod
-        def forPath(cls, s, p):
-            calls["path"] = p
-            return cls()
-
-        def alias(self, a):
-            calls["target_alias"] = a
-            return self
-
-        def merge(self, source, cond):
-            calls["source_cols"] = source.columns
-            calls["cond"] = cond
-            return self
-
-        def whenMatchedUpdateAll(self):
-            calls["chain"].append("matched_update_all")
-            return self
-
-        def whenNotMatchedInsertAll(self):
-            calls["chain"].append("not_matched_insert_all")
-            return self
-
-        def execute(self):
-            calls["chain"].append("execute")
-
-    tables_mod = types.ModuleType("delta.tables")
-    tables_mod.DeltaTable = FakeDeltaTable
-    delta_mod = types.ModuleType("delta")
-    delta_mod.tables = tables_mod
-    monkeypatch.setitem(sys.modules, "delta", delta_mod)
-    monkeypatch.setitem(sys.modules, "delta.tables", tables_mod)
-    monkeypatch.setattr(writers, "_delta_available", lambda s: True)
-
-    enriched = transform_weather(batch)
-    counts = writers.merge_upsert(spark, enriched, str(tmp_path / "t"))
-    assert calls["cond"] == (
-        "t.city = s.city AND t.country = s.country AND t.timestamp = s.timestamp"
-    )
-    assert calls["chain"] == [
-        "matched_update_all", "not_matched_insert_all", "execute",
-    ]
-    assert calls["target_alias"] == "t"
-    assert set(enriched.columns) == set(calls["source_cols"])
-    assert counts == {"inserted": -1, "updated": -1}
-
-
 def test_quality_gate_failure_on_dirty_batch(spark, tmp_path):
     rows = [_obs("A", "AA", 0, 15.0), _obs("B", "BB", 0, 999.0)]
     df = spark.createDataFrame(rows, RAW_SCHEMA)
@@ -962,7 +899,7 @@ def test_recover_sweeps_foreign_protocol_staging(spark, tmp_path):
     # stale garbage from two OTHER protocols' mid-staging crashes
     os.makedirs(p + ".staged-feedbeef")
     spark.range(3).write.parquet(p + ".compact-tmp-fab")
-    rep = recover_staged_crash(p, staging_prefixes=(".upsert-tmp-",))
+    rep = recover_staged_crash(p)
     assert rep["action"] == "clean"
     assert rep["removed_stale_dirs"] == 2
     assert glob.glob(p + ".staged-*") == []
@@ -1178,6 +1115,79 @@ def test_upsert_rejects_null_batch_keys_and_fresh_table_dups(spark, tmp_path):
     with pytest.raises(ValueError, match="duplicate rows"):
         merge_upsert(spark, dup, p, keys=("id",), partition_by=())
     assert not os.path.exists(p)
+    # The check groups by the merge keys ALONE: two rows sharing a key
+    # are duplicates even when they sit in different partitions, on a
+    # fresh table and on an existing one.
+    q = str(tmp_path / "parted")
+    split = spark.createDataFrame(
+        [(1, "a", "s0"), (1, "b", "s1")], "id long, v string, shard string"
+    )
+    pk = dict(keys=("id",), partition_by=("shard",))
+    with pytest.raises(ValueError, match="duplicate rows"):
+        merge_upsert(spark, split, q, **pk)
+    assert not os.path.exists(q)
+    seed = spark.createDataFrame(
+        [(1, "x", "s0"), (2, "y", "s1")], "id long, v string, shard string"
+    )
+    assert merge_upsert(spark, seed, q, **pk) == {"inserted": 2, "updated": 0}
+    with pytest.raises(ValueError, match="duplicate rows"):
+        merge_upsert(spark, split, q, **pk)
+    rows = {r["id"]: (r["v"], r["shard"]) for r in spark.read.parquet(q).collect()}
+    assert rows == {1: ("x", "s0"), 2: ("y", "s1")}
+
+
+def test_upsert_driver_action_count(spark, tmp_path, monkeypatch):
+    """merge_upsert's driver actions, in order: ONE batch aggregate
+    (contract check + row count + touched partition values), then the
+    `updated` count when the table exists, then the staged write. Every
+    action re-plans its tree on the driver, so a second pass over the
+    batch shows up here before it shows on a wall clock. Only the
+    outermost call counts (first() runs collect() inside)."""
+    from pyspark.sql.classic.dataframe import DataFrame
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    calls: list = []
+    depth = [0]
+
+    def spy(cls, name):
+        real = getattr(cls, name)
+
+        def wrapped(*a, **kw):
+            if depth[0] == 0:
+                calls.append(name)
+            depth[0] += 1
+            try:
+                return real(*a, **kw)
+            finally:
+                depth[0] -= 1
+
+        monkeypatch.setattr(cls, name, wrapped)
+
+    for name in ("first", "collect", "count"):
+        spy(DataFrame, name)
+    spy(DataFrameWriter, "parquet")
+
+    schema = "id long, v string, shard string"
+    day1 = spark.createDataFrame([(i, "a", f"s{i % 2}") for i in range(6)], schema)
+    day2 = spark.createDataFrame([(i, "b", f"s{i % 2}") for i in range(3, 9)], schema)
+
+    def run(df, path, parts):
+        calls.clear()
+        counts = merge_upsert(spark, df, path, keys=("id",), partition_by=parts)
+        return counts, list(calls)
+
+    p = str(tmp_path / "parted")
+    assert run(day1, p, ("shard",)) == (
+        {"inserted": 6, "updated": 0}, ["first", "parquet"]
+    )
+    assert run(day2, p, ("shard",)) == (
+        {"inserted": 3, "updated": 3}, ["first", "count", "parquet"]
+    )
+    f = str(tmp_path / "flat")
+    day1.write.parquet(f)
+    assert run(day2, f, ()) == (
+        {"inserted": 3, "updated": 3}, ["first", "count", "parquet"]
+    )
 
 
 def test_upsert_preserves_existing_null_partition_rows(spark, tmp_path):
